@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
 
 import graft.sketch.CmsOps
+import graft.skew.AnchoredSalt.anchoredSalt
 
 /** Fragment-replicate (Pig-style) skewed equi-join.
   *
@@ -24,15 +25,19 @@ import graft.sketch.CmsOps
   *    concatenated key string, so `("ab","c")` can't collide with `("a","bc")`;
   *    the concatenated key feeds only the CMS.
   *  - '''C2''' outer joins run as ONE salted outer join: presence markers
-  *    identify null-padded rows, and a replica-count window keeps exactly one
-  *    padded row per genuinely-unmatched input row — the reference would emit
-  *    one null-padded row *per replica* for unmatched rows under replication.
+  *    identify null-padded rows, and an anchored salt ([[AnchoredSalt]]:
+  *    each key's first row per partition sits in fragment 0) lets one
+  *    row-local filter keep exactly one padded row per genuinely-unmatched
+  *    input row, the one padded in fragment 0, with no second shuffle. The
+  *    reference would emit one null-padded row *per replica* for unmatched
+  *    rows under replication.
   *  - '''C3''' semi/anti joins get their own exact salted decomposition
   *    ([[saltedSemiAnti]]: fragment left, replicate the right side's
   *    DISTINCT key set to every fragment) — the reference passes them
   *    through the pairwise salting, which corrupts them; unknown join types
   *    are rejected.
-  *  - '''C4''' salts come from `rand(seed)` columns instead of broadcast
+  *  - '''C4''' salts come from per-partition-seeded expressions
+  *    (`rand(seed)`, [[AnchoredSalt]]) instead of broadcast
   *    `java.util.Random` instances — no PRNG state serialization, plan stays
   *    declarative.
   *  - '''C5''' the replication formula is preserved verbatim:
@@ -51,9 +56,7 @@ object SkewJoin {
 
   private[graft] val SaltL = "__graft_salt_l"
   private[graft] val SaltR = "__graft_salt_r"
-  // outer-join bookkeeping: per-input-row ids, presence markers, replica counts
-  private val Lid = "__graft_lid"
-  private val Rid = "__graft_rid"
+  // outer-join presence markers and per-key fragment counts
   private val Lm = "__graft_lm"
   private val Rm = "__graft_rm"
   private val RepL = "__graft_rep_l"
@@ -243,26 +246,33 @@ object SkewJoin {
   /** The fragment-replicate core: salted equi-join, all join types in ONE
     * pass over each input.
     *
-    * Left rows get `SaltL = uniform(0, repL(key))` and are exploded over all
-    * `repR(key)` right-fragment ids as `SaltR`; right rows mirror. Joining on
-    * `usingColumns ++ (SaltL, SaltR)` pairs every left fragment with every
-    * right replica exactly once (reference salting layout,
+    * Left rows get `SaltL = anchoredSalt(key, repL(key))` and are exploded
+    * over all `repR(key)` right-fragment ids as `SaltR`; right rows mirror.
+    * Joining on `usingColumns ++ (SaltL, SaltR)` pairs every left fragment
+    * with every right replica exactly once (reference salting layout,
     * `dfimplicits.scala:110-116`).
     *
-    * Outer semantics without re-scanning the inputs: the join itself runs as
-    * the requested outer type; presence markers (`lit(true)` columns, null
-    * only where the outer join padded) identify null-padded rows, and ONE
-    * count-over-owner window keeps a padded row only when ALL of its
-    * replicas went unmatched (a row of a matched key can still produce
-    * padded replicas — a salt cell the other side happened not to draw).
-    * The owner key is the padded row's input-row id, and a unique
-    * (left-id, right-id) pair for matched rows, so every matched row sits in
-    * its own singleton window partition and the count only gates padded
-    * rows. A union-of-filtered-legs formulation was rejected: the optimizer
-    * specializes each leg (outer-join elimination, per-leg null filters), the
-    * legs' exchanges stop canonicalizing equal, and every leg re-scans both
-    * inputs — the single window costs one uniform (never skewed) shuffle of
-    * the join output instead, and each input is scanned exactly once.
+    * Outer semantics with one row-local filter. The join runs as the
+    * requested outer type, and presence markers (`lit(true)` columns, null
+    * only where the join padded) identify null-padded rows. Left row l of
+    * key k, at fragment a, has one replica per right cell (a, j). That
+    * replica is padded iff no right row of k sits at fragment j. The salt is
+    * anchored ([[AnchoredSalt]]): whenever k has any right row, some right
+    * row of k sits at fragment 0. So l's replica (a, 0) is padded iff k has
+    * no right row at all, and in that case every one of l's replicas is
+    * padded. Keeping a padded left replica only when `SaltR = 0` therefore
+    * keeps exactly one copy of each truly unmatched left row and drops every
+    * false padding (a row of a matched key whose cell the other side left
+    * empty). Right rows mirror with `SaltL = 0`. No row ids, replica counts
+    * or window are needed, so the join output is never re-shuffled and each
+    * input is scanned exactly once.
+    *
+    * User filters above the result may be pushed into an input. Spark only
+    * does that for predicates on the preserved side of an outer join (whose
+    * own anchors the rule does not read), for key predicates (which keep or
+    * drop a key's rows together) or after turning the join into an inner
+    * one, where every output row is a match. None of these can remove the
+    * anchor the keep rule reads.
     */
   private def saltedJoin(
       left: DataFrame,
@@ -316,57 +326,31 @@ object SkewJoin {
 
     val seed = conf.CMSseed.toLong
     val outer = joinType != "inner"
+    val keyStruct = struct(usingColumns.map(col): _*)
 
-    // Outer joins carry per-input-row ids (shared by all replicas of a row),
-    // presence markers, and the row's replica count, so padded rows can be
-    // resolved in one pass after the join.
-    val ls = {
-      val base =
-        if (outer)
-          left.withColumn(Lid, monotonically_increasing_id()).withColumn(Lm, lit(true))
-        else left
-      val salted = base
-        .withColumn(RepL, repL)
-        .withColumn(RepR, repR)
-        .withColumn(SaltL, floor(rand(seed) * col(RepL)).cast("int"))
-        .withColumn(SaltR, explode(sequence(lit(0), col(RepR) - 1)))
-      if (outer) salted.drop(RepL) else salted.drop(RepL, RepR)
-    }
-    val rs = {
-      val base =
-        if (outer)
-          right.withColumn(Rid, monotonically_increasing_id()).withColumn(Rm, lit(true))
-        else right
-      val salted = base
-        .withColumn(RepL, repL)
-        .withColumn(RepR, repR)
-        .withColumn(SaltR, floor(rand(seed + 1) * col(RepR)).cast("int"))
-        .withColumn(SaltL, explode(sequence(lit(0), col(RepL) - 1)))
-      if (outer) salted.drop(RepR) else salted.drop(RepL, RepR)
-    }
+    // Outer joins carry presence markers, so padded rows can be told apart.
+    def marked(df: DataFrame, marker: String) =
+      if (outer) df.withColumn(marker, lit(true)) else df
+    val ls = marked(left, Lm)
+      .withColumn(RepL, repL)
+      .withColumn(RepR, repR)
+      .withColumn(SaltL, anchoredSalt(keyStruct, col(RepL), seed))
+      .withColumn(SaltR, explode(sequence(lit(0), col(RepR) - 1)))
+      .drop(RepL, RepR)
+    val rs = marked(right, Rm)
+      .withColumn(RepL, repL)
+      .withColumn(RepR, repR)
+      .withColumn(SaltR, anchoredSalt(keyStruct, col(RepR), seed + 1))
+      .withColumn(SaltL, explode(sequence(lit(0), col(RepL) - 1)))
+      .drop(RepL, RepR)
 
     val joined = ls.join(rs, usingColumns ++ Seq(SaltL, SaltR), joinType)
-    val helperCols = Seq(SaltL, SaltR, Lid, Rid, Lm, Rm, RepL, RepR)
-    if (!outer) return joined.drop(helperCols: _*)
-
-    // A padded row for key k appears once per replica whose salt cell the
-    // other side left empty. Keep it only if EVERY replica went unmatched
-    // (count over the row id == replica count), and then only the salt-0
-    // copy. Matched rows get a unique (left-id, right-id) owner — singleton
-    // partitions, count unused — so one window serves all cases.
-    val isLeftNull = col(Rm).isNull   // left row present, right side padded
-    val isRightNull = col(Lm).isNull  // right row present, left side padded
-    // owner = (left row id or -1, right row id or -1): padded rows group with
-    // their sibling replicas (the missing side's id is null → -1), matched
-    // rows get a unique pair (ids are non-negative, so -1 never collides)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(coalesce(col(Lid), lit(-1L)), coalesce(col(Rid), lit(-1L)))
-    joined
-      .withColumn("__graft_miss", count(lit(1)).over(w))
-      .filter(
-        (!isLeftNull && !isRightNull) ||
-          (isLeftNull && col("__graft_miss") === col(RepR) && col(SaltR) === 0) ||
-          (isRightNull && col("__graft_miss") === col(RepL) && col(SaltL) === 0))
-      .drop(helperCols :+ "__graft_miss": _*)
+    val resolved =
+      if (!outer) joined
+      else joined.filter(
+        (col(Lm) && col(Rm)) ||
+          (col(Rm).isNull && col(SaltR) === 0) ||
+          (col(Lm).isNull && col(SaltL) === 0))
+    resolved.drop(SaltL, SaltR, Lm, Rm)
   }
 }

@@ -39,6 +39,12 @@ object Bridge {
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.asInstanceOf[CSparkSession].internalCreateDataFrame(rdd, schema)
 
+  /** The PRNG behind `rand(seed)` (`XORShiftRandom`, `private[spark]`), so a
+    * custom nondeterministic expression seeds per partition exactly like
+    * `Rand` (`seed + partitionIndex`). */
+  def xorShiftRandom(seed: Long): java.util.Random =
+    new org.apache.spark.util.random.XORShiftRandom(seed)
+
   /** Unload every loaded streaming state-store provider and stop the
     * maintenance task (`StateStore.stop()`, `private[sql]`). Hygiene for a
     * long single-JVM suite running hundreds of short-lived streaming

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -56,11 +58,11 @@ class PlanSpec extends AnyFunSuite {
       s"no codegen spans:\n$p")
   }
 
-  test("outer skewJoin scans each input once (single-pass window design)") {
-    // the full-outer decomposition used to re-scan both inputs 3×; the
-    // single-pass design (one salted outer join + one window) must plan
-    // exactly one FileScan per table. Broadcast off pins the at-scale
-    // shape (100-TB sides are never broadcast).
+  test("outer skewJoin scans each input once and plans no window") {
+    // the outer decomposition is one salted outer join plus a row-local
+    // keep filter: one FileScan per table, and no Window, which would
+    // re-shuffle the whole (replicated) join output. Broadcast off pins the
+    // at-scale shape (100-TB sides are never broadcast).
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
@@ -76,6 +78,9 @@ class PlanSpec extends AnyFunSuite {
         s"FileScan parquet[^\\n]*$table\\.parquet".r.findAllIn(planStr).length
       assert(scansOf("lineitem") <= 1, s"lineitem scanned more than once:\n$planStr")
       assert(scansOf("part") <= 1, s"part scanned more than once:\n$planStr")
+      val windows = new AdaptiveSparkPlanHelper {}
+        .collect(q.queryExecution.executedPlan) { case w: WindowExec => w }
+      assert(windows.isEmpty, s"final plan has a Window:\n$planStr")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 

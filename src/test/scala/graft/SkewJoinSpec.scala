@@ -120,7 +120,9 @@ class SkewJoinSpec extends AnyFunSuite {
     }
   }
 
-  test("fragmentation spreads a hot key across reducers (skew-effect regression)") {
+  /** Asserts fragmentation spreads a 95%-hot key across reducers: the
+    * output's partition skew is ≥3× below the plain join's. */
+  private def assertSpreadsHotKey(joinType: String): Unit = {
     import spark.implicits._
     import graft.skew.PartitionStats._
     // one key carrying 95% of the rows
@@ -136,8 +138,8 @@ class SkewJoinSpec extends AnyFunSuite {
     // reducer skew to begin with (that's the cheap fix when it applies)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val salted = hot.skewJoin(rhs, Seq("k"), "inner", cfg)
-      val plain = hot.join(rhs, Seq("k"), "inner")
+      val salted = hot.skewJoin(rhs, Seq("k"), joinType, cfg)
+      val plain = hot.join(rhs, Seq("k"), joinType)
       assert(salted.count() == plain.count())
       val saltedRatio = salted.partitionSkewRatio
       val plainRatio = plain.partitionSkewRatio
@@ -147,6 +149,78 @@ class SkewJoinSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.adaptive.enabled", prev)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
     }
+  }
+
+  test("fragmentation spreads a hot key across reducers (skew-effect regression)") {
+    assertSpreadsHotKey("inner")
+  }
+
+  test("full outer output keeps the salted join's spread (skew-effect regression)") {
+    // no re-shuffle after the join: the outer result is partitioned like
+    // the salted join itself
+    assertSpreadsHotKey("full_outer")
+  }
+
+  // Hot keys with fewer rows than fragments: replicationFactor 10 lifts
+  // every present key to the cap of 8 fragments on each side (its debiased
+  // estimate is ≥ 1), but each side holds only 2-5 rows per key, so most
+  // salt cells of a matched key
+  // are empty on one side and its replicas there come out padded. Orphan
+  // keys on each side and null keys must still come out padded once.
+  private val sparseConf = SkewJoinConf(CMSeps = 1e-3, replicationFactor = 10,
+    maxReplication = Some(8))
+
+  private def sparseSides = {
+    import spark.implicits._
+    def side(name: String, orphans: Range, salt: Int) = {
+      val matched = for {
+        k <- 1 to 40
+        i <- 1 to 2 + (k * salt) % 4
+      } yield (Option(k.toLong), Option(k * 100 + i).filter(_ % 7 != 0))
+      val only = for { k <- orphans; i <- 1 to 3 } yield (Option(k.toLong), Option(i))
+      val nulls = (1 to 3).map(i => (Option.empty[Long], Option(-i)))
+      spark.createDataset(matched ++ only ++ nulls).toDF("k", name).repartition(4)
+    }
+    (side("lv", 100 to 109, 1), side("rv", 200 to 209, 3))
+  }
+
+  test("outer skewJoin ≡ plain join when hot keys leave salt cells empty") {
+    val (l, r) = sparseSides
+    for {
+      st <- Seq(CrossSkew, LeftSkew, RightSkew)
+      jt <- Seq("left_outer", "right_outer", "full_outer")
+    } withClue(s"skewType=$st joinType=$jt: ") {
+      l.skewJoin(r, Seq("k"), jt, sparseConf.copy(skewType = st))
+        .ensureDatasetEquals(l.join(r, Seq("k"), jt))
+    }
+  }
+
+  test("user filters above an outer skewJoin ≡ the same filters over the plain join") {
+    // the keep rule is a plain Filter, so the optimizer may push a user
+    // filter past it into an input (or turn the outer join inner)
+    val (l, r) = sparseSides
+    val filters = Seq(
+      "left payload" -> (col("lv") % 2 === 0),
+      "right payload" -> (col("rv") % 3 =!= 0),
+      "payload is null" -> col("rv").isNull,
+      "key" -> (col("k") > 20))
+    for {
+      (name, f) <- filters
+      jt <- Seq("left_outer", "right_outer", "full_outer")
+    } withClue(s"filter=$name joinType=$jt: ") {
+      l.skewJoin(r, Seq("k"), jt, sparseConf).filter(f)
+        .ensureDatasetEquals(l.join(r, Seq("k"), jt).filter(f))
+    }
+  }
+
+  test("SkewJoinConf rejects out-of-range settings") {
+    val bad = Seq(
+      () => SkewJoinConf(CMSeps = 0), () => SkewJoinConf(CMSeps = 1),
+      () => SkewJoinConf(CMSdelta = 0), () => SkewJoinConf(CMSdelta = 1.5),
+      () => SkewJoinConf(replicationFactor = 0), () => SkewJoinConf(replicationFactor = -1),
+      () => SkewJoinConf(maxReplication = Some(0)))
+    bad.foreach(mk => intercept[IllegalArgumentException](mk()))
+    SkewJoinConf(maxReplication = Some(1)) // the smallest valid cap
   }
 
   test("skewJoin under AQE: stays correct, pre-empts OptimizeSkewedJoin; plain join is the positive control") {
